@@ -10,21 +10,20 @@ largest tiebreak). Without ORDER BY, an arbitrary single match is kept
 NULL right columns. The canonical point-in-time shape is
 ``condition = right.ts <= left.ts`` + ``order_by = right.ts``.
 
-Three physical strategies (survey §7.1-3), selectable or auto:
+Two physical strategies (survey §7.1-3), one route rule in ``last_join``:
 
-- ``broadcast`` — small right side: broadcast hash join + one
-  row_number partition-by-left-row. No shuffle of the left table.
-- ``shuffle`` — shuffle hash/sort-merge join on the equi keys +
-  row_number reduction (DataFrame form of the reference's
-  ``reduceByKey`` keep-max, JoinPlan.scala:176-196). Robust default;
-  the join explodes |left_key_rows| × |right_key_rows| before reducing,
-  so it degrades on hot keys with many right versions.
-- ``merge_asof`` — co-grouped ``applyInPandas`` running a per-key
-  backward merge (pandas ``merge_asof``): one shuffle of each side on
-  the key, O(n log n) per key, no row explosion. The scalable default
-  at 10^12-row scale for the time-condition case.
+- ``union_asof`` — both sides unioned into one per-key timeline, one
+  sort, the newest right row carried forward by a native window. One
+  shuffle, no row explosion. Taken for the canonical point-in-time
+  shape: both as-of ts columns, ORDER BY absent or the right ts, no
+  residual condition, ``pick='max'`` and at least one equi key.
+- ``shuffle`` — left join on the equi keys + row_number reduction
+  (DataFrame form of the reference's ``reduceByKey`` keep-max,
+  JoinPlan.scala:176-196). Handles every other shape. Spark plans the
+  join as a ``BroadcastHashJoin`` when its size estimate puts the right
+  side under ``spark.sql.autoBroadcastJoinThreshold``.
 
-All strategies stay Arrow/JVM-side — no per-row Python.
+Both strategies stay JVM-side — no per-row Python.
 """
 
 from __future__ import annotations
@@ -32,9 +31,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-import numpy as np
-import pandas as pd
 
 __all__ = ["last_join"]
 
@@ -50,7 +46,7 @@ def last_join(
     asof_left_ts: str | None = None,
     asof_right_ts: str | None = None,
     strict: bool = False,
-    how: str = "auto",  # 'auto' | 'broadcast' | 'shuffle' | 'union_asof' | 'merge_asof'
+    how: str = "auto",  # 'auto' | 'union_asof' | 'shuffle'
     right_prefix: str | None = None,
     prefix_keys: bool = False,
     pick: str = "max",  # 'max' (ordered LAST JOIN) | 'min' (storage-order semantics)
@@ -61,43 +57,46 @@ def last_join(
         on: equi-join keys — column names present in both sides, or
             (left_col, right_col) pairs.
         order_by: right-side column whose max picks the surviving match.
-        condition: extra residual predicate over the joined columns
-            (only for broadcast/shuffle strategies).
+        condition: extra residual predicate over the joined columns.
         asof_left_ts/asof_right_ts: sugar for the point-in-time
-            condition ``right.ts <= left.ts`` (strict: ``<``); required
-            by the merge_asof strategy, implied condition for others.
+            condition ``right.ts <= left.ts`` (strict: ``<``).
+        how: ``auto`` applies the route rule (module docstring); naming
+            ``union_asof`` requires the inputs that rule takes it for.
         right_prefix: rename right output columns with this prefix to
             avoid collisions (key columns are not duplicated).
+        prefix_keys: also emit the right key columns, prefixed, NULL
+            on unmatched left rows.
     """
     keys = [(k, k) if isinstance(k, str) else tuple(k) for k in on]
+    union_fits = bool(
+        asof_left_ts and asof_right_ts and order_by in (None, asof_right_ts)
+        and condition is None and pick == "max" and keys
+    )
     if how == "auto":
-        if asof_left_ts and order_by in (None, asof_right_ts) and condition is None:
-            how = "union_asof"
-        else:
-            how = "shuffle"
+        how = "union_asof" if union_fits else "shuffle"
     if how == "union_asof":
-        if not (asof_left_ts and asof_right_ts):
-            raise ValueError("union_asof strategy needs asof_left_ts/asof_right_ts")
+        if not union_fits:
+            raise ValueError(
+                "union_asof needs asof_left_ts/asof_right_ts, at least one "
+                "equi key, order_by None or the right ts, no condition and "
+                "pick='max'")
         return _union_asof_join(left, right, keys, asof_left_ts, asof_right_ts,
-                                strict, right_prefix)
-    if how == "merge_asof":
-        if not (asof_left_ts and asof_right_ts):
-            raise ValueError("merge_asof strategy needs asof_left_ts/asof_right_ts")
-        return _merge_asof_join(left, right, keys, asof_left_ts, asof_right_ts,
-                                strict, right_prefix)
+                                strict, right_prefix, prefix_keys)
+    if how != "shuffle":
+        raise ValueError(f"last_join: unknown how={how!r} "
+                         f"(expected 'auto', 'union_asof' or 'shuffle')")
     return _rownum_join(left, right, keys, order_by, condition,
-                        asof_left_ts, asof_right_ts, strict,
-                        broadcast=(how == "broadcast"), right_prefix=right_prefix,
-                        prefix_keys=prefix_keys, pick=pick)
+                        asof_left_ts, asof_right_ts, strict, right_prefix,
+                        prefix_keys, pick)
 
 
 def _renamed_right(right: DataFrame, keys, right_prefix, prefix_keys: bool = False):
     """Right side with output columns renamed; returns (df, outname map).
 
-    Join-key columns keep their names by default (the merge/union
-    strategies group on them); ``prefix_keys`` prefixes them too so the
-    caller can still address the right side's key values (NULL on
-    unmatched rows) — used by the SQL front-end.
+    Join-key columns keep their names by default (the union strategy
+    groups on them); ``prefix_keys`` prefixes them too so the caller
+    can still address the right side's key values (NULL on unmatched
+    rows) — used by the SQL front-end.
     """
     key_rights = {r for _, r in keys}
     mapping = {}
@@ -111,8 +110,8 @@ def _renamed_right(right: DataFrame, keys, right_prefix, prefix_keys: bool = Fal
 
 
 def _rownum_join(left, right, keys, order_by, condition,
-                 asof_left_ts, asof_right_ts, strict, broadcast, right_prefix,
-                 prefix_keys: bool = False, pick: str = "max"):
+                 asof_left_ts, asof_right_ts, strict, right_prefix,
+                 prefix_keys, pick):
     right2, m = _renamed_right(right, keys, right_prefix, prefix_keys)
     # tag left rows (reference: SparkUtil.addIndexColumn). Raw
     # monotonically_increasing_id is hazardous under AQE stage retry:
@@ -151,8 +150,7 @@ def _rownum_join(left, right, keys, order_by, condition,
     if condition is not None:
         cond = condition if cond is None else (cond & condition)
 
-    rside = F.broadcast(right2) if broadcast else right2
-    joined = lt.join(rside, cond, "left")
+    joined = lt.join(right2, cond, "left")
 
     order_exprs = []
     if order_by:
@@ -181,18 +179,7 @@ def _rownum_join(left, right, keys, order_by, condition,
     return out
 
 
-def _check_collisions(left, right2, key_cols, rts_out):
-    """Left/right output-name collisions fail analysis deep inside the
-    plan — raise a readable error up front (pass right_prefix)."""
-    overlap = (set(right2.columns) - set(key_cols)) & set(left.columns)
-    if overlap:
-        raise ValueError(
-            f"last_join: right columns {sorted(overlap)} collide with left "
-            f"output names — pass right_prefix to rename the right side"
-        )
-
-
-def _union_asof_join(left, right, keys, lts, rts, strict, right_prefix):
+def _union_asof_join(left, right, keys, lts, rts, strict, right_prefix, prefix_keys):
     """Fully native as-of join: union both sides into one per-key
     timeline, sort, and carry the newest right row forward with
     ``last(struct(right_cols), ignorenulls=True)`` over an unbounded
@@ -204,7 +191,7 @@ def _union_asof_join(left, right, keys, lts, rts, strict, right_prefix):
     ``allow exact matches``); under ``strict`` left rows sort first.
     Ties among right rows at one ts resolve to the max tiebreak (the
     struct comparison is positional over right columns) — matching the
-    row_number and merge_asof strategies.
+    row_number strategy.
     """
     if any(lk != rk for lk, rk in keys):
         right = right.select(*[
@@ -213,7 +200,14 @@ def _union_asof_join(left, right, keys, lts, rts, strict, right_prefix):
     key_cols = [lk for lk, _ in keys]
     right2, m = _renamed_right(right, [(k, k) for k in key_cols], right_prefix)
     rts_out = m[rts]
-    _check_collisions(left, right2, key_cols, rts_out)
+    # a left/right output-name collision fails analysis deep inside the
+    # plan — raise a readable error up front
+    overlap = (set(right2.columns) - set(key_cols)) & set(left.columns)
+    if overlap:
+        raise ValueError(
+            f"last_join: right columns {sorted(overlap)} collide with left "
+            f"output names — pass right_prefix to rename the right side"
+        )
     right_val_cols = [c for c in right2.columns if c not in key_cols]
     left_only = [c for c in left.columns if c not in key_cols and c != lts]
 
@@ -252,63 +246,12 @@ def _union_asof_join(left, right, keys, lts, rts, strict, right_prefix):
         *[F.col(c) for c in left_only],
         *[matched.getField(c).alias(c) for c in right_val_cols],
     )
-    return out.select(*left.columns, *right_val_cols)
-
-
-def _merge_asof_join(left, right, keys, lts, rts, strict, right_prefix):
-    """Co-grouped per-key backward as-of merge — the scale path."""
-    if any(lk != rk for lk, rk in keys):
-        right = right.select(*[
-            F.col(c).alias(dict((r, l) for l, r in keys).get(c, c)) for c in right.columns
-        ])
-    key_cols = [lk for lk, _ in keys]
-    right2, m = _renamed_right(right, [(k, k) for k in key_cols], right_prefix)
-    rts_out = m[rts]
-    _check_collisions(left, right2, key_cols, rts_out)
-
-    right_val_cols = [c for c in right2.columns if c not in key_cols]
-    out_fields = list(left.schema.fields) + [
-        right2.schema[c] for c in right_val_cols
-    ]
-    out_schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in out_fields])
-    left_cols = list(left.columns)
-    allow_exact = not strict
-
-    def merge(ldf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(ldf):
-            # keep the Arrow-derived dtypes so empty groups round-trip
-            out = ldf.copy()
-            for c in right_val_cols:
-                out[c] = rdf[c].head(0)
-            return out[left_cols + right_val_cols]
-        lsorted = ldf.sort_values(lts, kind="mergesort")
-        null_ts = lsorted[lts].isna()
-        lsorted = pd.concat([lsorted[~null_ts], lsorted[null_ts]])
-        lvalid = lsorted[~lsorted[lts].isna().to_numpy()]
-        lnull = lsorted[lsorted[lts].isna().to_numpy()]
-        if len(rdf):
-            # sort by (ts, *value cols) so the tie-break at equal right
-            # ts is deterministic and matches the row_number strategies
-            tie = [c for c in right_val_cols if c != rts_out]
-            rsorted = rdf.sort_values([rts_out] + tie, kind="mergesort").dropna(subset=[rts_out])
-        else:
-            rsorted = rdf
-        if len(rsorted) and len(lvalid):
-            merged = pd.merge_asof(
-                lvalid, rsorted[right_val_cols],
-                left_on=lts, right_on=rts_out,
-                direction="backward", allow_exact_matches=allow_exact,
-            )
-        else:
-            merged = lvalid.copy()
-            for c in right_val_cols:
-                merged[c] = None
-        if len(lnull):
-            ln = lnull.copy()
-            for c in right_val_cols:
-                ln[c] = None
-            merged = pd.concat([merged, ln], ignore_index=True)
-        return merged[left_cols + right_val_cols]
-
-    cg = left.groupBy(*key_cols).cogroup(right2.groupBy(*key_cols))
-    return cg.applyInPandas(merge, schema=out_schema)
+    out = out.select(*left.columns, *right_val_cols)
+    if prefix_keys and right_prefix:
+        # a match's right key values equal the left's; NULL otherwise
+        hit = F.col(rts_out).isNotNull()
+        for lk, rk in keys:
+            pk = f"{right_prefix}{rk}"
+            if pk not in out.columns:
+                out = out.withColumn(pk, F.when(hit, F.col(lk)))
+    return out

@@ -46,7 +46,7 @@ from openmldb_spark.operators.window import Agg, WindowSpec
 __all__ = ["long_window_agg", "long_window_eligible", "split_decomposable",
            "rewrite_unbounded_distinct_count", "partial_exprs", "partial_cols",
            "merge_exprs", "carry_exprs", "running_cols", "combine_cols",
-           "long_window_agg_bounded", "bounded_range_eligible"]
+           "long_window_agg_bounded", "bounded_range_eligible", "unbounded_route"]
 
 _DECOMPOSABLE = {"sum", "count", "avg", "min", "max",
                  "sum_where", "count_where", "avg_where", "min_where", "max_where"}
@@ -143,6 +143,22 @@ def rewrite_unbounded_distinct_count(
         )
         new_aggs.append(Agg("sum", ind, a.name))
     return out, new_aggs
+
+
+def unbounded_route(df: DataFrame, spec: WindowSpec, aggs: list[Agg],
+                    union=None) -> DataFrame | None:
+    """The pre-agg plan for an UNBOUNDED frame whose aggregates are all
+    decomposable once ``distinct_count`` is rewritten; None when the
+    shape does not qualify. Shared by ``window_agg(impl='auto')`` and
+    ``window_agg_skewed``: O(rows) carry-in, no per-key single-task
+    window and no salted full-history replication (VERDICT r2 #5)."""
+    if spec.preceding is not None or union:
+        return None
+    df2, aggs2 = rewrite_unbounded_distinct_count(df, spec, aggs)
+    if not long_window_eligible(spec, aggs2, None, df2):
+        return None
+    out = long_window_agg(df2, spec, aggs2)
+    return out.select(*df.columns, *[a.name for a in aggs])
 
 
 def _order_ms(df: DataFrame, order_by: str) -> Column:

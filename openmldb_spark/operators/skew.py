@@ -61,12 +61,17 @@ def key_counts(df: DataFrame, keys: list[str], cache: bool = True) -> DataFrame:
     precomputed ``openmldb.window.skew.opt.config`` distribution table
     (WindowAggPlan.scala:245-251)."""
     out = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n__"))
-    if cache:
-        out = out.persist()
-        _LAST_HOT.append(out)  # same bounded-FIFO lifecycle as hot caches
-        while len(_LAST_HOT) > _MAX_HOT_CACHED:
-            _LAST_HOT.pop(0).unpersist(False)
-    return out
+    return _persist_hot(out) if cache else out
+
+
+def _persist_hot(df: DataFrame) -> DataFrame:
+    """Persist ``df`` into the bounded FIFO ``_LAST_HOT``, unpersisting
+    the oldest entry past ``_MAX_HOT_CACHED``."""
+    df = df.persist()
+    _LAST_HOT.append(df)
+    while len(_LAST_HOT) > _MAX_HOT_CACHED:
+        _LAST_HOT.pop(0).unpersist(False)
+    return df
 
 
 def _order_ms_expr(df: DataFrame, order_by: str):
@@ -112,14 +117,11 @@ def window_agg_skewed(
     spec = canonicalize_spec(spec)
     keys = list(spec.partition_by)
 
-    if spec.preceding is None and not union:
-        from openmldb_spark.operators.long_window import (
-            long_window_agg, long_window_eligible, rewrite_unbounded_distinct_count)
+    from openmldb_spark.operators.long_window import unbounded_route
 
-        df2, aggs2 = rewrite_unbounded_distinct_count(df, spec, aggs)
-        if long_window_eligible(spec, aggs2, union, df2):
-            out = long_window_agg(df2, spec, aggs2)
-            return out.select(*df.columns, *[a.name for a in aggs])
+    out = unbounded_route(df, spec, aggs, union)
+    if out is not None:
+        return out
 
     if bounded_impl == "subtract" and spec.preceding is not None and not union:
         from openmldb_spark.operators.long_window import (
@@ -167,27 +169,15 @@ def window_agg_skewed(
     if row_key:
         # salted-kernel path: payload columns bypass the Arrow↔Python
         # pipe (see window_agg)
-        from openmldb_spark.operators.window import kernel_columns
+        from openmldb_spark.operators.window import _slim_join_back
 
-        need = kernel_columns(spec, aggs) | set(row_key)
-        payload = [c for c in df.columns if c not in need]
-        if payload and not any(a.name in df.columns for a in aggs):
-            slim = df.select(*[c for c in df.columns if c in need])
-            feats = window_agg_skewed(slim, spec, aggs, quantiles,
-                                      hot_threshold, union,
-                                      native_when_cold=False,
-                                      key_stats=counts)
-            feats = feats.select(*row_key, *[a.name for a in aggs])
-            # null-safe join-back: NULL key components must not drop
-            # rows (see window._slim_join_back)
-            for k in row_key:
-                feats = feats.withColumnRenamed(k, f"__rk_{k}__")
-            cond = None
-            for k in row_key:
-                c = df[k].eqNullSafe(F.col(f"__rk_{k}__"))
-                cond = c if cond is None else (cond & c)
-            out = df.join(feats, on=cond, how="inner")
-            return out.select(*df.columns, *[a.name for a in aggs])
+        slimmed = _slim_join_back(
+            df, spec, aggs, row_key,
+            lambda s: window_agg_skewed(s, spec, aggs, quantiles, hot_threshold,
+                                        union, native_when_cold=False,
+                                        key_stats=counts))
+        if slimmed is not None:
+            return slimmed
 
     work = with_flags(df, union).withColumn("__oms__", _order_ms_expr(df, spec.order_by))
 
@@ -258,10 +248,7 @@ def window_agg_skewed(
     hot = tagged.filter(F.col("__qs__").isNotNull())
     if big:
         hot = hot.repartition(*keys, _BUCKET)
-    hot = hot.persist()
-    _LAST_HOT.append(hot)
-    while len(_LAST_HOT) > _MAX_HOT_CACHED:
-        _LAST_HOT.pop(0).unpersist(False)
+    hot = _persist_hot(hot)
     if big:
         hot.count()
     copies = []
@@ -305,11 +292,8 @@ def window_agg_skewed(
         # just the per-bucket context suffix (≤ n_rows × buckets ×
         # hot keys — tiny) so the q-1 branches are filters on a small
         # cached table instead of q-1 window recomputations
-        ctx = (hot.withColumn("__rk__", F.row_number().over(wdesc))
-               .filter(F.col("__rk__") <= n_rows).drop("__rk__").persist())
-        _LAST_HOT.append(ctx)
-        while len(_LAST_HOT) > _MAX_HOT_CACHED:
-            _LAST_HOT.pop(0).unpersist(False)
+        ctx = _persist_hot(hot.withColumn("__rk__", F.row_number().over(wdesc))
+                           .filter(F.col("__rk__") <= n_rows).drop("__rk__"))
         if big:
             ctx.count()  # same race: materialize before the siblings
         for i in range(1, quantiles):

@@ -287,14 +287,11 @@ def window_agg(
         # non-decomposable aggregates anyway, so evaluating the
         # decomposable ones alongside is marginal, while a split would
         # add an entire extra 2-shuffle pass.
-        from openmldb_spark.operators.long_window import (
-            long_window_agg, long_window_eligible, rewrite_unbounded_distinct_count)
+        from openmldb_spark.operators.long_window import unbounded_route
 
-        if spec.preceding is None and not union:
-            df2, aggs2 = rewrite_unbounded_distinct_count(df, spec, aggs)
-            if long_window_eligible(spec, aggs2, union, df2):
-                out = long_window_agg(df2, spec, aggs2)
-                return out.select(*df.columns, *[a.name for a in aggs])
+        out = unbounded_route(df, spec, aggs, union)
+        if out is not None:
+            return out
         if union:
             # WINDOW UNION natively: union rows only FEED frames, so
             # the flag-tagged union evaluates on the same native plans
@@ -589,6 +586,11 @@ def _native_distinct_count_rows(df: DataFrame, spec: WindowSpec, agg: Agg,
             .drop("__dc_pos__", "__dc_d__", "__dc_probe__"))
 
 
+# optimizer size estimate at which small-frame distinct_count switches
+# from collect_list to the lag-chain plan (see _native_window_agg)
+_DC_LAG_MIN_BYTES = 1 << 30
+
+
 def _native_window_agg(df: DataFrame, spec: WindowSpec, aggs: list[Agg]) -> DataFrame:
     # reference buffer semantics: rows with a NULL order key are
     # neither emitted nor part of any frame (the kernel's NULL-order
@@ -749,16 +751,13 @@ def _native_window_agg(df: DataFrame, spec: WindowSpec, aggs: list[Agg]) -> Data
     # LOSES ~2.2× task-sec on sub-million-row inputs where allocation
     # pressure is trivial (request_mode 6.9 → 16 task-s, the r5 driver
     # regression adjudicated in OPTIMIZATION_r06.md). Catalyst's size
-    # estimate picks the regime; threshold overridable for clusters.
+    # estimate picks the regime.
     prefer_dc_lag = True
     if small_dc and any(a.func == "distinct_count" for a in aggs):
-        import os as _os
-
-        _lag_min = int(_os.environ.get("OMLDB_DC_LAG_MIN_BYTES", str(1 << 30)))
         try:
             est = int(str(df._jdf.queryExecution().optimizedPlan()
                           .stats().sizeInBytes()))
-            prefer_dc_lag = est >= _lag_min
+            prefer_dc_lag = est >= _DC_LAG_MIN_BYTES
         except Exception:  # noqa: BLE001 — no stats: keep the scale-safe plan
             pass
     for a in aggs:
@@ -2553,10 +2552,6 @@ def run_kernel_partitioned(work: DataFrame, keys: list[str], kernel, out_schema)
                 mask &= (col == last).to_numpy(dtype=bool, na_value=False)
         return len(pdf) - int(mask.sum())
 
-    import os as _os
-
-    streaming = _os.environ.get("OMLDB_KERNEL_STREAMING", "1") != "0"
-
     def run_partition(batches):
         carry: pd.DataFrame | None = None
         for pdf in batches:
@@ -2572,22 +2567,9 @@ def run_kernel_partitioned(work: DataFrame, keys: list[str], kernel, out_schema)
         if carry is not None and len(carry):
             yield kernel(carry)
 
-    def run_partition_concat(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        if not len(pdf):
-            return
-        yield kernel(pdf)
-
     n = int(work.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if streaming:
-        parted = work.repartition(n, *keys).sortWithinPartitions(*keys)
-        return parted.mapInPandas(run_partition, schema=out_schema)
-    # OMLDB_KERNEL_STREAMING=0: whole-partition concat (no JVM sort; Python
-    # memory bounded by partition, not group)
-    return work.repartition(n, *keys).mapInPandas(run_partition_concat, schema=out_schema)
+    parted = work.repartition(n, *keys).sortWithinPartitions(*keys)
+    return parted.mapInPandas(run_partition, schema=out_schema)
 
 
 def _py_agg(agg: Agg, pdf: pd.DataFrame, idxs: list[int]):

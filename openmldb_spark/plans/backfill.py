@@ -51,7 +51,6 @@ class FeatureWindow:
     spec: WindowSpec
     aggs: list[Agg]
     union: list[DataFrame] | None = None
-    impl: str = "auto"
     skew: bool = False
     skew_quantiles: int = 8
     skew_hot_threshold: int = 100_000
@@ -100,8 +99,7 @@ def backfill_features(
                 key_stats=stats_cache[kset],
             )
         else:
-            out = window_agg(out, fw.spec, fw.aggs, union=fw.union, impl=fw.impl,
-                             row_key=fw.row_key)
+            out = window_agg(out, fw.spec, fw.aggs, union=fw.union, row_key=fw.row_key)
     for src in asof or []:
         out = last_join(
             out,

@@ -187,8 +187,7 @@ def request_features(
                 row_key=fw.row_key,
             )
         else:
-            out = window_agg(out, spec, fw.aggs, union=union, impl=fw.impl,
-                             row_key=fw.row_key)
+            out = window_agg(out, spec, fw.aggs, union=union, row_key=fw.row_key)
     for src in asof or []:
         out = last_join(
             out, src.df, on=src.on, order_by=src.right_ts,

@@ -2955,37 +2955,13 @@ class SqlEngine:
                 # (JoinPlan.scala:112-151); names resolve post-prefix
                 cond_col = F.expr(" AND ".join(f"({_cond_expr(c)})" for c in residual))
 
-            pure_asof = (
-                asof_l is not None and asof_r is not None and cond_col is None
-                and eqs and (order_raw is None or order_raw == asof_r)
-                and pick == "max"
-            )
             def _apply_last_join(d):
                 # the request-identity key applies only to sides that
-                # carry it (stored-history mirrors don't)
+                # carry it (stored-history mirrors don't); the SQL
+                # surface keeps right key columns addressable (prefixed)
+                # and NULL for unmatched left rows
                 eqs_d = [(l, r) for l, r in eqs
                          if l != "__req_id__" or l in d.columns]
-                if pure_asof:
-                    # fully-native sorted-merge path: one shuffle, no
-                    # row explosion (VERDICT r1 'what's wrong' #2) —
-                    # the shuffle row_number strategy stays for
-                    # residual conditions
-                    d = last_join(
-                        d, right, on=eqs_d,
-                        asof_left_ts=asof_l, asof_right_ts=asof_r,
-                        strict=strict, how="union_asof", right_prefix=prefix,
-                    )
-                    # materialize prefixed right KEY columns (NULL when
-                    # the left row found no match) so SELECT can address
-                    # them, matching the row_number strategy's output
-                    matched = F.col(f"{prefix}{asof_r}").isNotNull()
-                    for lk, rk in eqs_d:
-                        pk = f"{prefix}{rk}"
-                        if pk not in d.columns:
-                            d = d.withColumn(pk, F.when(matched, F.col(lk)))
-                    return d
-                # SQL surface keeps right key columns addressable
-                # (prefixed) and NULL for unmatched left rows
                 return last_join(
                     d,
                     right,
@@ -2995,7 +2971,6 @@ class SqlEngine:
                     asof_left_ts=asof_l,
                     asof_right_ts=asof_r,
                     strict=strict,
-                    how="shuffle",
                     right_prefix=prefix,
                     prefix_keys=True,
                     pick=pick,

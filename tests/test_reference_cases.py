@@ -10,6 +10,7 @@ features outside scope. One known divergence is listed explicitly.
 from __future__ import annotations
 
 import glob
+import os
 
 import pytest
 import yaml
@@ -173,6 +174,13 @@ FILES = (
         "/root/reference/cases/integration_test/ut_case/test_unique_expect.yaml",
     ]
 )
+
+# the corpus is an external checkout: without it the whole module is
+# one declared skip instead of a FileNotFoundError per listed file
+CASES_DIR = os.path.commonpath(FILES)
+if not os.path.isdir(CASES_DIR):
+    pytest.skip(f"reference YAML corpus {CASES_DIR} is absent",
+                allow_module_level=True)
 
 # (file suffix, case id) → reason (documented divergences / unsupported
 # dialect corners; everything else in the listed files must pass)
